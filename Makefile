@@ -13,7 +13,7 @@ test:
 	python -m pytest tests/ -x -q
 
 bench:
-	python bench.py
+	python3 perfbench/run.py --workload batch_kg --seed 1 --seconds 8 --trace 0
 
 clean:
 	rm -rf dist

@@ -12,6 +12,7 @@ from transner_spark.operators.graph import (
     graph_degrees,
     graph_pagerank,
     graph_two_hop,
+    two_hop_dropped_mids,
 )
 
 # (subj_id, pred, obj_id, weight): a→b (twice via preds), a→c, b→c,
@@ -118,6 +119,12 @@ def test_two_hop_hub_guard(edges_df):
         for r in graph_two_hop(edges_df, max_mid_degree=3).collect()
     }
     assert got == {("a", "c"): 1, ("b", "a"): 1, ("a", "a"): 1}
+    # the audit twin reports exactly the complement: a, at degree 4
+    dropped = {
+        r["mid"]: r["deg"]
+        for r in two_hop_dropped_mids(edges_df, max_mid_degree=3).collect()
+    }
+    assert dropped == {"a": 4}
 
 
 def test_neighbors_topk_exact_and_deterministic(edges_df):

@@ -639,3 +639,26 @@ def test_stream_pipeline_log_fresh_checkpoint_fails_loud(
         stream_pipeline_log(
             spark, log_dirs["in"] + "/*", log_dirs["state"], log_dirs["cp2"]
         )
+
+
+def test_read_pipeline_links_missing_version_fails_loud(spark, tiny_pdf, log_dirs):
+    """A state whose committed link version directory is gone (partial
+    copy, manual cleanup) raises the curated error with its remedy, not
+    a raw parquet path error."""
+    import shutil
+
+    from transner_spark.streaming.logstate import (
+        LINKS_DIR,
+        _read_log_current,
+        read_pipeline_links,
+        stream_pipeline_log,
+    )
+
+    _write_batch(spark, tiny_pdf, log_dirs["in"], 0, 3, "b0")
+    stream_pipeline_log(
+        spark, log_dirs["in"] + "/*", log_dirs["state"], log_dirs["cp"]
+    )
+    _, last_applied, _ = _read_log_current(log_dirs["state"])
+    shutil.rmtree(os.path.join(log_dirs["state"], LINKS_DIR, f"v{last_applied}"))
+    with pytest.raises(RuntimeError, match="restore that directory"):
+        read_pipeline_links(spark, log_dirs["state"])

@@ -15,6 +15,14 @@ from pyspark.sql import SparkSession
 from transner_spark.config import PipelineConfig
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM in whole GiB (at least 1g): in local mode the
+    one driver JVM holds every task's storage and execution memory, and
+    the Python workers need the other half."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2**31)}g"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "transner_spark",
@@ -30,7 +38,7 @@ def get_spark(
         from pyspark import SparkConf
 
         if SparkConf().get("spark.master", None) is None:
-            cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+            cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
             master = f"local[{cpus}]"
     if shuffle_partitions is None and master is not None and (
         master == "local" or master.startswith("local[")
@@ -39,11 +47,11 @@ def get_spark(
         # payload is not a core count): match the chosen core count. When
         # the master is external (spark-submit / cluster), leave the
         # config UNSET so the cluster default + AQE coalescing govern
-        # shuffle parallelism — hardcoding 32 here would silently cap a
-        # 1000-executor job.
+        # shuffle parallelism — a hardcoded width here would silently cap
+        # a 1000-executor job.
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
         n = inner.split(",")[0]  # local[N,maxFailures] is valid syntax
-        shuffle_partitions = 32 if n in ("*", "") else int(n)
+        shuffle_partitions = len(os.sched_getaffinity(0)) if n in ("*", "") else int(n)
 
     builder = SparkSession.builder
     if master is not None:
@@ -71,18 +79,10 @@ def get_spark(
         # exchanges, exactly AQE's documented intent for the flag.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # 24g default (was 8g): in local mode the ONE driver JVM holds
-        # every "executor's" storage AND execution memory, so an 8g heap
-        # at 1.5M-turn bench scale is heap-bound in the shuffle-heavy
-        # post-annotate stages (cached array columns + concurrent task
-        # execution memory → GC pressure / spill to this host's
-        # ~116 MB/s disk). Measured on the local[8] scaling leg, same
-        # code and corpus: triples 23.9s → 2.3s, links 27.7s → 6.2s,
-        # leg wall 109.7s → 77.5s after the bump. The heap is FIXED
-        # across parallelism levels (memory is not the variable under
-        # test; a real 4N-executor cluster would bring 4x memory, so a
-        # constant heap only understates 4N's advantage).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

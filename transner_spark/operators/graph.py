@@ -29,8 +29,7 @@ beyond one executor):
   never wanted). The guard is observable, not silent: a run that needs
   the audit trail calls ``two_hop_dropped_mids(edges, max_mid_degree)``
   — the exact complement of the filter the join applies — to get each
-  dropped hub and its degree (bench_two_hop reports these counts in
-  BENCH.md).
+  dropped hub and its degree.
 """
 
 from __future__ import annotations
@@ -284,9 +283,9 @@ def _undirected_degrees(und: DataFrame) -> DataFrame:
 def _oriented(und: DataFrame, deg: DataFrame) -> DataFrame:
     """Degree-ordered orientation of the undirected link set: each edge
     as (src, dst) with src the (deg, id)-smaller endpoint (ties resolve
-    to ``a``, the id-smaller one, since und keeps a < b). The single
-    definition shared by graph_triangles and the bench evidence script —
-    the orientation rule IS the scale claim, so it must not fork."""
+    to ``a``, the id-smaller one, since und keeps a < b). The
+    orientation rule IS graph_triangles' scale claim: it keeps every
+    pivot's oriented out-degree O(sqrt(m))."""
     orient_a_first = F.col("deg_a") <= F.col("deg_b")  # ties: a < b
     return (
         und.join(

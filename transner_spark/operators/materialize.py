@@ -306,36 +306,15 @@ def edges_diff(edges_old: DataFrame, edges_new: DataFrame) -> DataFrame:
     )
 
 
-def write_edges(edges: DataFrame, path: str, cfg: PipelineConfig | None = None) -> None:
-    """Write partitioned by subject-hash bucket (Iceberg would use
-    ``bucket(N, subj_id)`` partition transform; Parquet fallback keeps the
-    identical layout via an explicit bucket column, SURVEY.md §1.2).
-
-    The repartition CLUSTERS rows by bucket before the partitioned write:
-    without it every upstream task writes a file into every bucket
-    directory (tasks × buckets small files — measured 2048 files / 11s
-    vs 64 files / 0.8s at sf0.1, and catastrophic at warehouse scale).
-    Write parallelism equals ``cfg.edge_buckets``, the same knob that
-    sizes the subject-hash layout — raise both together as the corpus
-    grows."""
-    cfg = cfg or PipelineConfig()
-    (
-        edges.repartition(cfg.edge_buckets, F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-
-
 def write_edges_bucketed(
     edges: DataFrame,
     table: str,
     path: str,
     cfg: PipelineConfig | None = None,
 ) -> None:
-    """Serving-layout twin of ``write_edges``: a Spark-native BUCKETED
-    table (``bucketBy(edge_buckets, subj_id)`` + ``sortBy``) registered
-    in the session catalog at ``path``.
+    """Serving-layout twin of the ``bucket``-partitioned edges table: a
+    Spark-native BUCKETED table (``bucketBy(edge_buckets, subj_id)`` +
+    ``sortBy``) registered in the session catalog at ``path``.
 
     Why it exists: a plain parquet directory carries no partitioning
     metadata, so EVERY downstream consumer that joins or aggregates on
@@ -354,10 +333,10 @@ def write_edges_bucketed(
     sandbox, so the exercised branch is the session-catalog parquet
     bucketed table — semantics and plan shape identical).
 
-    Bucket count = ``cfg.edge_buckets``, the same knob as the
-    subject-hash layout in ``write_edges`` — raise both with corpus
-    size. ``sortBy(subj_id)`` additionally lets single-file buckets skip
-    the join's Sort."""
+    Bucket count = ``cfg.edge_buckets``, the same knob that sizes the
+    subject-hash ``bucket`` column — raise it with corpus size.
+    ``sortBy(subj_id)`` additionally lets single-file buckets skip the
+    join's Sort."""
     cfg = cfg or PipelineConfig()
     (
         edges.write.mode("overwrite")

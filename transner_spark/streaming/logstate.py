@@ -54,8 +54,8 @@ manifest-list):
 Read path at scale: segments share one schema, so the reader is a
 single multi-path parquet scan → one hash aggregate on the edge key
 (map-side partials bound hot edges). Read amplification grows with the
-live-segment count — exactly the measured LSM trade
-(scripts/bench_logstate.py, BENCH.md) — and compaction is the knob.
+live-segment count — exactly the measured LSM trade (BENCH.md) — and
+compaction is the knob.
 
 Snapshot retention + time travel: ``retain_snapshots=k`` keeps the
 snapshots of the last k DISTINCT applied batches (and every segment
@@ -996,7 +996,13 @@ def read_pipeline_links(spark: SparkSession, state_dir: str) -> DataFrame:
     _, last_applied, _ = _read_log_current(state_dir)
     if last_applied < 0:
         raise ValueError(f"no committed pipeline state in {state_dir!r}")
-    _live_link_versions(state_dir, last_applied)  # loud links/ check
+    if last_applied not in _live_link_versions(state_dir, last_applied):
+        raise RuntimeError(
+            f"state dir {state_dir!r} has no link version for its last "
+            f"committed batch ({LINKS_DIR}/v{last_applied}) — the state "
+            "was partially copied or cleaned by hand; restore that "
+            "directory or rebuild the state with stream_pipeline_log."
+        )
     return spark.read.parquet(_links_version_path(state_dir, last_applied))
 
 
