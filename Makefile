@@ -1,4 +1,4 @@
-.PHONY: dist test bench clean
+.PHONY: dist test gates bench clean
 
 dist:
 	@mkdir -p dist
@@ -9,8 +9,12 @@ zf = zipfile.ZipFile('dist/transner_spark.zip', 'w', zipfile.ZIP_DEFLATED); \
  for f in fs if f.endswith('.py')]; \
 zf.close(); print('dist/transner_spark.zip')"
 
+# the ROADMAP Tier-1 command, verbatim
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+gates:
+	python scripts/check_correctness.py
 
 bench:
 	python3 perfbench/run.py --workload batch_kg --seed 1 --seconds 8 --trace 0

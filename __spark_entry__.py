@@ -1401,55 +1401,15 @@ def q_stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_stream_edges_batch_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming KG maintenance gate: split the corpus into 4 files, run
-    ``stream_edge_increments`` one-file-per-micro-batch (each batch's
-    edge increment MERGED into the maintained table via the incremental
-    monoid, against the batch-computed canonical map — the two-speed
-    design), and compare the final maintained table to the whole-corpus
-    SQL edge derivation. Proves the streaming path lands on EXACTLY the
-    batch answer regardless of micro-batch boundaries."""
-    import shutil
-    import tempfile
-
-    from transner_spark.operators.canonicalize import canonicalize
-    from transner_spark.sources.transcripts import ensure_transcripts_parquet
-    from transner_spark.streaming.incremental import (
-        current_edge_state,
-        stream_edge_increments,
-    )
-
-    src = ensure_transcripts_parquet(REPO, sf_dir)
-    canon = canonicalize(_links(spark, sf_dir))
-    work = tempfile.mkdtemp(prefix="stream_edges_gate_")
-    try:
-        in_dir = os.path.join(work, "in")
-        spark.read.parquet(src).repartition(4).write.parquet(in_dir)
-        state = os.path.join(work, "edges")
-        stream_edge_increments(
-            spark, in_dir, state, os.path.join(work, "ck"), canon
-        )
-        out = _select_edge_cols(
-            spark.read.parquet(current_edge_state(state)[0])
-        ).toPandas()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        out,
-        "subj_id string, pred string, obj_id string, weight long, "
-        "first_epoch long, last_epoch long",
-    )
-
-
 def _stream_log_gate(
     spark: SparkSession, sf_dir: str, run_stream, read_result, schema: str
 ) -> DataFrame:
-    """Shared harness for the log-substrate gates: 4-file micro-batch
-    split with inline compaction at 3 live segments — the run exercises
-    append, compact, and append-after-compact — and the merge-on-read
-    result materialized before the tempdir is removed. ``run_stream``
-    gets (spark, in_dir, state, ck_dir, canon); ``read_result`` gets
-    (spark, state) and returns the gate-shaped DataFrame."""
+    """Shared harness for the log-substrate gates: the corpus split into
+    4 files, one file per micro-batch, against the batch-computed
+    canonical map, and the merge-on-read result materialized before the
+    tempdir is removed. ``run_stream`` gets (spark, in_dir, state,
+    ck_dir, canon) and picks the compaction cadence; ``read_result``
+    gets (spark, state) and returns the gate-shaped DataFrame."""
     import shutil
     import tempfile
 
@@ -1470,11 +1430,37 @@ def _stream_log_gate(
     return spark.createDataFrame(out, schema)
 
 
+def q_stream_edges_batch_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming KG maintenance gate, snapshot semantics: the 4-file
+    micro-batch split with ``compact_every=1``, so every batch's edge
+    increment is folded with the maintained table into one base segment
+    (merged via the incremental monoid, against the batch-computed
+    canonical map — the two-speed design). The final maintained table
+    must equal the whole-corpus SQL edge derivation: the streaming path
+    lands on EXACTLY the batch answer regardless of micro-batch
+    boundaries."""
+    from transner_spark.streaming.logstate import (
+        read_edge_log,
+        stream_edge_increments_log,
+    )
+
+    return _stream_log_gate(
+        spark,
+        sf_dir,
+        lambda s, ind, st, ck, canon: stream_edge_increments_log(
+            s, ind, st, ck, canon, compact_every=1
+        ),
+        lambda s, st: _select_edge_cols(read_edge_log(s, st)),
+        "subj_id string, pred string, obj_id string, weight long, "
+        "first_epoch long, last_epoch long",
+    )
+
+
 def q_stream_edges_log_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-structured streaming maintenance gate (streaming/logstate):
-    same 4-file micro-batch split as stream_edges_batch_eq, but each
-    batch APPENDS an increment-sized segment instead of rewriting the
-    maintained table. The merge-on-read state must equal the
+    same 4-file micro-batch split as stream_edges_batch_eq, but inline
+    compaction at 3 live segments — the run exercises append, compact,
+    and append-after-compact. The merge-on-read state must equal the
     whole-corpus SQL edge derivation regardless of micro-batch
     boundaries or compaction points."""
     from transner_spark.streaming.logstate import (

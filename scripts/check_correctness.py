@@ -40,7 +40,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")

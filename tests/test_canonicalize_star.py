@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from tests.conftest import assert_pdf_equal
 from transner_spark.operators.annotate import explode_triples
 from transner_spark.operators.canonicalize import (
-    canonicalize_star,
+    canonicalize,
     connected_components,
     links_to_edges,
 )
@@ -19,7 +19,7 @@ from transner_spark.operators.linking import link_surfaces, node_surfaces
 
 def test_star_equals_iterative_on_real_links(spark, annotated):
     links = link_surfaces(spark, node_surfaces(explode_triples(annotated)))
-    star = canonicalize_star(links).toPandas()
+    star = canonicalize(links).toPandas()
     iterative = connected_components(links_to_edges(links)).select(
         "node_id", F.col("canon_id")
     ).toPandas()
@@ -39,7 +39,7 @@ def test_star_handles_synthetic_star_forest(spark):
     )
     got = {
         r["node_id"]: r["canon_id"]
-        for r in canonicalize_star(links).collect()
+        for r in canonicalize(links).collect()
     }
     # component {ent:1, surface:anna, surface:annie}: min is "ent:1"
     assert got["surface:anna"] == "ent:1"

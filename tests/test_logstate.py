@@ -1,7 +1,7 @@
 """Log-structured streaming edge state (streaming/logstate.py):
 O(batch) segment appends, merge-on-read equality with the batch rollup,
-amortized compaction, and the same crash/identity guarantees as the
-snapshot layout."""
+amortized compaction, crash/identity guarantees, and the loud refusal
+of on-disk state this module did not write."""
 
 from __future__ import annotations
 
@@ -49,13 +49,18 @@ def _batch_edges(tiny_df, canon, lo, hi):
     return materialize_edges(explode_triples(annotate_turns(part)), canon)
 
 
-def test_log_state_merge_on_read_equals_batch(spark, tiny_pdf, tiny_df, log_dirs):
+@pytest.mark.parametrize("compact_every", [None, 1])
+def test_log_state_merge_on_read_equals_batch(
+    spark, tiny_pdf, tiny_df, log_dirs, compact_every
+):
     """Appended segments merged on read equal the whole-corpus rollup
-    after every arrival; a rerun with no new files is a no-op; and the
-    per-batch write is increment-sized — the live segments' TOTAL row
-    count equals the sum of the increments, not batches x table."""
+    after every arrival; a rerun with no new files is a no-op. Without
+    compaction the per-batch write is increment-sized — the live
+    segments' TOTAL row count equals the sum of the increments, not
+    batches x table; ``compact_every=1`` (snapshot semantics) folds
+    every batch into one base segment holding the merged table."""
     from transner_spark.streaming.logstate import (
-        log_edge_segments,
+        log_segments,
         read_edge_log,
         stream_edge_increments_log,
     )
@@ -63,28 +68,41 @@ def test_log_state_merge_on_read_equals_batch(spark, tiny_pdf, tiny_df, log_dirs
     d = log_dirs
     canon = _canon(spark, tiny_df)
 
+    def run():
+        stream_edge_increments_log(
+            spark, d["in"] + "/*", d["state"], d["cp"], canon,
+            compact_every=compact_every,
+        )
+
     _write_batch(spark, tiny_pdf, d["in"], 0, 3, "b0")
-    stream_edge_increments_log(spark, d["in"] + "/*", d["state"], d["cp"], canon)
+    run()
     assert _snap(read_edge_log(spark, d["state"])) == _snap(
         _batch_edges(tiny_df, canon, 0, 3)
     )
 
+    # rerun, nothing new → identical state (no double-merge)
     before = _snap(read_edge_log(spark, d["state"]))
-    stream_edge_increments_log(spark, d["in"] + "/*", d["state"], d["cp"], canon)
+    run()
     assert _snap(read_edge_log(spark, d["state"])) == before
 
     _write_batch(spark, tiny_pdf, d["in"], 3, 5, "b1")
-    stream_edge_increments_log(spark, d["in"] + "/*", d["state"], d["cp"], canon)
+    run()
     assert _snap(read_edge_log(spark, d["state"])) == _snap(
         _batch_edges(tiny_df, canon, 0, 5)
     )
 
-    # O(batch) writes: two live segments, and their combined stored rows
-    # equal the two increments' rows (the snapshot layout would have
-    # rewritten increment-1's edges a second time inside commit 2)
-    segs, last = log_edge_segments(d["state"])
-    assert len(segs) == 2 and last >= 1
+    segs, last = log_segments(d["state"])
     stored = sum(spark.read.parquet(s).count() for s in segs)
+    if compact_every == 1:
+        # every batch folded: one base segment holding the merged table
+        assert len(segs) == 1 and last >= 1
+        assert os.path.basename(segs[0]) == f"base-{last}"
+        assert stored == _batch_edges(tiny_df, canon, 0, 5).count()
+        return
+    # O(batch) writes: two live segments, and their combined stored rows
+    # equal the two increments' rows (a per-batch rewrite would have
+    # stored increment-1's edges a second time inside commit 2)
+    assert len(segs) == 2 and last >= 1
     want = (
         _batch_edges(tiny_df, canon, 0, 3).count()
         + _batch_edges(tiny_df, canon, 3, 5).count()
@@ -100,7 +118,7 @@ def test_log_state_compaction_offline_and_inline(
     same rollup inline inside the batch commit."""
     from transner_spark.streaming.logstate import (
         compact_edge_log,
-        log_edge_segments,
+        log_segments,
         read_edge_log,
         stream_edge_increments_log,
     )
@@ -110,12 +128,12 @@ def test_log_state_compaction_offline_and_inline(
     _write_batch(spark, tiny_pdf, d["in"], 0, 3, "b0")
     _write_batch(spark, tiny_pdf, d["in"], 3, 5, "b1")
     stream_edge_increments_log(spark, d["in"] + "/*", d["state"], d["cp"], canon)
-    segs, last = log_edge_segments(d["state"])
+    segs, last = log_segments(d["state"])
     assert len(segs) == 2
     before = _snap(read_edge_log(spark, d["state"]))
 
     assert compact_edge_log(spark, d["state"]) == 2
-    segs2, last2 = log_edge_segments(d["state"])
+    segs2, last2 = log_segments(d["state"])
     assert len(segs2) == 1 and os.path.basename(segs2[0]).startswith("base-")
     assert last2 == last  # compaction never moves the batch cursor
     assert _snap(read_edge_log(spark, d["state"])) == before
@@ -155,7 +173,7 @@ def test_log_state_compaction_offline_and_inline(
     stream_edge_increments_log(
         spark, d["in"] + "/*", state2, d["cp2"], canon, compact_every=2
     )
-    segs3, _ = log_edge_segments(state2)
+    segs3, _ = log_segments(state2)
     assert len(segs3) == 1 and os.path.basename(segs3[0]).startswith("base-")
     assert _snap(read_edge_log(spark, state2)) == before
 
@@ -233,7 +251,7 @@ def test_log_substrate_generalizes_to_profile_partials(
     )
     from transner_spark.streaming.logstate import (
         compact_profile_partials_log,
-        log_edge_segments,
+        log_segments,
         read_profile_partials_log,
         stream_profile_partials_log,
     )
@@ -245,7 +263,7 @@ def test_log_substrate_generalizes_to_profile_partials(
     stream_profile_partials_log(
         spark, d["in"] + "/*", d["state"], d["cp"], canon
     )
-    assert len(log_edge_segments(d["state"])[0]) == 2
+    assert len(log_segments(d["state"])[0]) == 2
 
     def view_snap(df):
         cols = [
@@ -267,13 +285,13 @@ def test_log_substrate_generalizes_to_profile_partials(
 
 
 def test_log_state_checkpoint_identity_guard(spark, tiny_pdf, tiny_df, log_dirs):
-    """Same loud-failure contract as the snapshot layout: a different
-    (or recreated) checkpoint against existing state raises instead of
+    """A different (or recreated) checkpoint against existing state — or
+    a two-field CURRENT with no recorded identity — raises instead of
     silently dropping batches, and the committed state is untouched."""
     import shutil
 
     from transner_spark.streaming.logstate import (
-        log_edge_segments,
+        log_segments,
         stream_edge_increments_log,
     )
 
@@ -281,14 +299,30 @@ def test_log_state_checkpoint_identity_guard(spark, tiny_pdf, tiny_df, log_dirs)
     canon = _canon(spark, tiny_df)
     _write_batch(spark, tiny_pdf, d["in"], 0, 3, "b0")
     stream_edge_increments_log(spark, d["in"] + "/*", d["state"], d["cp"], canon)
-    committed = log_edge_segments(d["state"])
+    committed = log_segments(d["state"])
 
     _write_batch(spark, tiny_pdf, d["in"], 3, 5, "b1")
     with pytest.raises(Exception, match="different checkpoint"):
         stream_edge_increments_log(
             spark, d["in"] + "/*", d["state"], d["cp2"], canon
         )
-    assert log_edge_segments(d["state"]) == committed
+    assert log_segments(d["state"]) == committed
+
+    # a two-field CURRENT (no recorded identity) is just as
+    # uncomparable — the guard must refuse it even under the ORIGINAL
+    # checkpoint
+    current = os.path.join(d["state"], "CURRENT")
+    with open(current) as fh:
+        current_line = fh.read()
+    with open(current, "w") as fh:
+        fh.write(" ".join(current_line.split()[:2]))
+    with pytest.raises(Exception, match="different checkpoint"):
+        stream_edge_increments_log(
+            spark, d["in"] + "/*", d["state"], d["cp"], canon
+        )
+    with open(current, "w") as fh:
+        fh.write(current_line)
+    assert log_segments(d["state"]) == committed
 
     # recreated-at-same-path checkpoint: ids restart, identity differs
     shutil.rmtree(d["cp"])
@@ -296,7 +330,25 @@ def test_log_state_checkpoint_identity_guard(spark, tiny_pdf, tiny_df, log_dirs)
         stream_edge_increments_log(
             spark, d["in"] + "/*", d["state"], d["cp"], canon
         )
-    assert log_edge_segments(d["state"]) == committed
+    assert log_segments(d["state"]) == committed
+
+
+def test_headerless_manifest_fails_loud(tmp_path):
+    """Every manifest ``_commit`` writes starts with a
+    ``#batch=<id> action=<...>`` header; a manifest without one was not
+    written by this module, and the next commit's prune refuses it
+    instead of guessing its batch id."""
+    from transner_spark.streaming.logstate import SEGMENTS_DIR, _commit
+
+    state = str(tmp_path / "state")
+    os.makedirs(os.path.join(state, SEGMENTS_DIR, "s0"))
+    with open(os.path.join(state, "MANIFEST.0"), "w") as fh:
+        fh.write(f"{SEGMENTS_DIR}/s0\n")
+    with pytest.raises(RuntimeError, match="no valid '#batch=<id>"):
+        _commit(
+            state, [f"{SEGMENTS_DIR}/s0"], 1, "ck", 1,
+            metrics={"action": "append", "segment": f"{SEGMENTS_DIR}/s0"},
+        )
 
 
 def test_log_state_time_travel(spark, tiny_pdf, tiny_df, log_dirs):

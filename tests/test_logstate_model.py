@@ -52,12 +52,12 @@ from transner_spark.streaming.logstate import (
     _commit,
     _manifest_seq,
     _persist_retention,
+    _read_log_current,
     _read_manifest,
     _resolve_asof,
     _state_retention,
     expire_snapshots,
 )
-from transner_spark.streaming.incremental import _read_current
 
 CK = "model-ck"
 
@@ -105,7 +105,7 @@ class LogStateModel(RuleBasedStateMachine):
         _commit(
             self.state_dir, rels, bid, CK, seq,
             retain=None,  # resolve the state's persisted policy
-            metrics={"action": "append"},
+            metrics={"action": "append", "segment": seg},
         )
         self._model_commit(seq, bid, tuple(rels), "append")
 
@@ -183,7 +183,7 @@ class LogStateModel(RuleBasedStateMachine):
 
     @invariant()
     def current_is_newest(self):
-        mname, bid, ck = _read_current(self.state_dir)
+        mname, bid, ck = _read_log_current(self.state_dir)
         if not self.snapshots:
             assert mname is None and bid == -1
             return

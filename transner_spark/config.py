@@ -8,7 +8,7 @@ reference counterpart.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 # The reference service rejects sentences longer than 150 whitespace words
@@ -49,11 +49,13 @@ SUPPORTED_TYPES = (
 class PipelineConfig:
     """End-to-end pipeline configuration.
 
-    ``strict_reference_parity`` keeps reference quirks on (first-occurrence
-    gazetteer offsets, adjacency-as-overlap, confidence string truncation,
-    disabled nested-LOC rule — the reference's nested-LOC path crashes on a
-    str round, /root/reference/transner/transner/ner.py:266, so it never
-    emits anything).
+    The defaults reproduce the reference service: the reference's quirks
+    (first-occurrence gazetteer offsets, adjacency-as-overlap, confidence
+    string truncation) are always on, and the two rule paths the service
+    never emits from stay off — ``apply_nested_loc=False`` (the
+    reference's nested-LOC path crashes on a str round, reference
+    ner.py:266) and ``apply_dates=False`` (the service never calls date
+    detection, reference api.py:59).
     """
 
     threshold: float = SERVICE_THRESHOLD
@@ -100,6 +102,3 @@ class PipelineConfig:
     # mapInPandas should LOWER this — batch bytes scale with row size
     # and this knob is Spark-session-global, not per-operator.
     arrow_batch_rows: int = 4096
-
-    # Rule R3 strict flag is derived
-    extra: dict = field(default_factory=dict)

@@ -4,7 +4,7 @@ Two paths, same result (every node labeled with the lexicographically
 smallest member of its component, matching
 kernels/canonical.connected_components):
 
-- ``canonicalize_star`` (default): the link graph is a star forest BY
+- ``canonicalize``: the link graph is a star forest BY
   CONSTRUCTION — ``link_surfaces`` keeps exactly one top-1 entity per
   distinct surface (operators/linking.py row_number() == 1), so every
   component is one entity plus its linked surfaces (or a singleton
@@ -14,13 +14,14 @@ kernels/canonical.connected_components):
   floor per run at sf0.1 (VERDICT r1 item 1b) and at 100 TB it is two
   shuffles on dim-sized keys instead of O(rounds) shuffle+checkpoint
   barriers.
-- ``connected_components``: the general-graph fallback — iterative
+- ``connected_components``: the general-graph path — iterative
   min-label propagation, bounded at O(diameter) rounds, localCheckpoint
-  per round to cut lineage. Kept for non-star edge sets (and as the
-  differential-test twin of the closed form).
+  per round to cut lineage. Used for non-star edge sets (dedup
+  clusters, graph components) and as the differential-test twin of the
+  closed form.
 
 Catalyst cannot express a loop (SURVEY.md §4), hence the driver
-iteration in the fallback.
+iteration in the general path.
 """
 
 from __future__ import annotations
@@ -92,16 +93,18 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
     return labels.select("node_id", F.col("label").alias("canon_id"))
 
 
-def canonicalize_star(links: DataFrame, eager: bool = True) -> DataFrame:
-    """Closed-form canonicalization for the star-forest link graph.
+def canonicalize(links: DataFrame) -> DataFrame:
+    """Closed-form canonicalization of a links table, whose link graph
+    is a star forest.
 
-    Precondition (guaranteed by link_surfaces): at most one row — hence
-    at most one entity — per norm_key. Output rows cover exactly the
-    nodes the iterative CC would label: every surface node and every
-    linked entity node.
+    Precondition (guaranteed by link_surfaces, runtime-guarded below):
+    at most one row — hence at most one entity — per norm_key. Output
+    rows cover exactly the nodes the iterative CC would label: every
+    surface node and every linked entity node; identical output on star
+    forests is pinned by a differential test against it.
 
-    ``eager=True`` localCheckpoints the result (like the iterative path
-    does per round): downstream consumers broadcast this map twice
+    The result is localCheckpointed (like the iterative path does per
+    round): downstream consumers broadcast this map twice
     (materialize_edges subj/obj resolve), and a cached-but-lazy plan
     containing a nested BroadcastExchange is NOT matched by the cache
     manager under those broadcast collects — measured 6.2s → 0.6s for
@@ -123,7 +126,7 @@ def canonicalize_star(links: DataFrame, eager: bool = True) -> DataFrame:
             F.raise_error(
                 F.concat(
                     F.lit(
-                        "canonicalize_star: more than one link row for "
+                        "canonicalize: more than one link row for "
                         "norm_key (not a star forest) — use "
                         "connected_components(links_to_edges(links)); key="
                     ),
@@ -154,21 +157,4 @@ def canonicalize_star(links: DataFrame, eager: bool = True) -> DataFrame:
         surface.alias("node_id"), surface.alias("canon_id")
     )
     out = surf_rows.unionByName(ent_rows).unionByName(singletons)
-    return out.localCheckpoint() if eager else out
-
-
-def canonicalize(
-    links: DataFrame, max_iterations: int = 25, method: str = "star"
-) -> DataFrame:
-    """Canonicalize a links table. ``method='star'`` (default) uses the
-    closed form — valid because link_surfaces emits exactly one row per
-    norm_key (runtime-guarded inside canonicalize_star); ``'iterative'``
-    routes to the general connected-components loop (bounded by
-    ``max_iterations``), required for non-star link graphs. Both must
-    produce identical output on star forests — pinned by
-    tests/test_canonicalize_star.py."""
-    if method == "iterative":
-        return connected_components(links_to_edges(links), max_iterations)
-    if method != "star":
-        raise ValueError(f"unknown canonicalize method: {method!r}")
-    return canonicalize_star(links)
+    return out.localCheckpoint()

@@ -13,6 +13,9 @@ Scale notes: the annotate stage is stateless per-row, so streaming adds
 no shuffle; the windowed aggregate keeps state bounded by the watermark
 horizon. ``trigger(availableNow=True)`` gives catch-up batch runs with
 streaming semantics (the test path, and the natural backfill mode).
+
+Maintained KG state (the edge table, entity-profile partials, the full
+chain) is written by the log substrate in streaming/logstate.py.
 """
 
 from __future__ import annotations
@@ -336,161 +339,3 @@ def stream_conversations(
         .start()
     )
 
-
-def _checkpoint_identity(checkpoint_dir: str) -> str:
-    """Stable identity of a streaming checkpoint: the query id Spark
-    records in ``<checkpoint>/metadata`` at stream start. A path digest
-    is NOT enough (review r4): a checkpoint deleted and recreated at the
-    SAME path restarts batch ids at 0 but keeps its digest, so the
-    guard would silently drop new batches — exactly the failure it
-    exists to make loud. The metadata query id is regenerated with the
-    checkpoint, so recreation is detected. Callers resolve this from
-    INSIDE foreachBatch (StreamExecution writes the file at query
-    start, before the first batch); a missing/unreadable metadata there
-    is itself an error worth raising. The uuid is whitespace-free —
-    safe inside the CURRENT line."""
-    import json as _json
-
-    with open(os.path.join(checkpoint_dir, "metadata")) as fh:
-        return str(_json.load(fh)["id"])
-
-
-def _read_current(state_dir: str) -> tuple[str | None, int, str | None]:
-    """(version name, last applied batch id, checkpoint identity) from
-    the CURRENT pointer; (None, -1, None) if nothing committed."""
-    cur = os.path.join(state_dir, "CURRENT")
-    if not os.path.exists(cur):
-        return None, -1, None
-    with open(cur) as fh:
-        fields = fh.read().split()
-    vname, bid = fields[0], int(fields[1])
-    ck_id = fields[2] if len(fields) > 2 else None
-    return vname, bid, ck_id
-
-
-def current_edge_state(state_dir: str) -> tuple[str | None, int]:
-    """Resolve the live snapshot of a ``stream_edge_increments`` state
-    directory: (parquet path, last applied batch id), or (None, -1) if
-    no snapshot has committed. Readers (gates, tests, serving jobs) go
-    through this instead of assuming a layout."""
-    vname, bid, _ = _read_current(state_dir)
-    if vname is None:
-        return None, -1
-    return os.path.join(state_dir, vname), bid
-
-
-def stream_edge_increments(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    canon: DataFrame,
-    cfg: PipelineConfig | None = None,
-    max_files_per_trigger: int = 1,
-    await_termination: bool = True,
-):
-    """Streaming KG maintenance: each micro-batch of new transcripts is
-    annotated, rolled up to an edge increment (operators/materialize),
-    and MERGED into the maintained edge table via the same
-    ``merge_edge_increments`` monoid the batch gate proves — the
-    foreachBatch twin of an Iceberg/Delta ``MERGE INTO``. The canonical
-    map is a parameter: it refreshes on a slower cadence than the edge
-    increments (the two-speed design documented on
-    merge_edge_increments); a canon refresh triggers a one-off batch
-    re-resolution, not a streaming change.
-
-    Local-parquet state commit — versioned snapshots + an atomic
-    ``CURRENT`` pointer, the file-system mirror of a table format's
-    snapshot log: each batch writes its merged table to
-    ``state_dir/v{batch_id}``, then a single ``os.replace`` of
-    ``state_dir/CURRENT`` (which records BOTH the live version and the
-    last applied batch id) commits it. A crash at any point leaves
-    CURRENT on the previous complete snapshot: an in-flight version dir
-    is simply overwritten on re-delivery, the batch id travels in the
-    same atomic commit as the data (no double-merge window), and
-    deleting ``state_dir`` removes the batch marker WITH the state (no
-    stale-marker no-op). Superseded versions are pruned after commit.
-    At warehouse scale all of this collapses into Iceberg/Delta's
-    atomic MERGE + snapshot expiry.
-
-    CURRENT also records the CHECKPOINT IDENTITY (the query id from
-    ``<checkpoint>/metadata``, which is regenerated whenever a
-    checkpoint is created — including recreation at the SAME path, the
-    case a path digest misses): batch ids are only monotone within one
-    checkpoint's id sequence, so pointing a fresh/relocated/recreated
-    checkpoint (whose ids restart at 0) at an existing state dir would
-    make ``batch_id <= last_applied`` silently drop genuinely new
-    batches. A mismatch — or
-    a committed legacy pointer with no recorded identity, which is just
-    as uncomparable — fails loud instead (ADVICE r3): reuse the
-    original checkpoint, start a new state dir, or migrate a known-good
-    legacy pointer by appending the identity field."""
-    import shutil
-
-    from transner_spark.operators.annotate import explode_triples
-    from transner_spark.operators.materialize import (
-        materialize_edges,
-        merge_edge_increments,
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # resolved here, not at wiring time: the metadata file this
-        # identity comes from exists only once the query has started
-        ck_identity = _checkpoint_identity(checkpoint_dir)
-        vname_cur, last_applied, state_ck = _read_current(state_dir)
-        if vname_cur is not None and state_ck != ck_identity:
-            # A committed state with EITHER a different identity OR a
-            # legacy two-field CURRENT (identity unknown — written before
-            # identities were recorded) is equally uncomparable: batch
-            # ids are only monotone within one checkpoint's sequence, so
-            # proceeding could silently drop genuinely new batches.
-            raise RuntimeError(
-                f"stream_edge_increments: state dir {state_dir!r} was "
-                f"built by a different checkpoint (or one with no "
-                f"recorded identity; state {state_ck}, this query "
-                f"{ck_identity}). Batch ids are not comparable across "
-                "checkpoints — reuse the original checkpoint_dir, start "
-                "a fresh state_dir, or (if this IS the original "
-                "checkpoint) append its identity as a third field of "
-                "CURRENT to migrate."
-            )
-        cur_path = (
-            os.path.join(state_dir, vname_cur) if vname_cur is not None else None
-        )
-        if batch_id <= last_applied:
-            return  # re-delivered batch: already committed
-        sess = batch_df.sparkSession
-        inc = materialize_edges(explode_triples(batch_df), canon, cfg)
-        if cur_path is not None:
-            merged = merge_edge_increments(
-                sess.read.parquet(cur_path), inc, cfg=cfg
-            )
-        else:
-            merged = inc
-        vname = f"v{batch_id}"
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, vname)
-        )
-        tmp = os.path.join(state_dir, f"CURRENT.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(f"{vname} {batch_id} {ck_identity}")
-        os.replace(tmp, os.path.join(state_dir, "CURRENT"))
-        for d in os.listdir(state_dir):  # prune superseded snapshots
-            if d.startswith("v") and d != vname:
-                shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    q = (
-        annotate_turns(stream, cfg)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q

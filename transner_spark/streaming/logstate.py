@@ -1,13 +1,11 @@
-"""Log-structured streaming edge state: O(batch) writes, merge-on-read,
-amortized compaction.
+"""Log-structured streaming state: O(batch) writes, merge-on-read,
+amortized compaction — the only writer of maintained streaming state.
 
-``stream_edge_increments`` (streaming/incremental.py) maintains the edge
-table as a full snapshot per micro-batch — simple and atomic, but every
-commit REWRITES the whole accumulated table, so per-batch write cost is
-O(table). At 10^12-turn scale that is the wrong asymptote: a maintained
-KG's steady state is tiny increments against a huge table, and the
-production pattern (Iceberg/Delta merge-on-read, LSM trees, Kafka
-compacted topics) is the opposite split:
+A layout that rewrites the whole accumulated table on every commit pays
+O(table) per micro-batch. At 10^12-turn scale that is the wrong
+asymptote: a maintained KG's steady state is tiny increments against a
+huge table, and the production pattern (Iceberg/Delta merge-on-read,
+LSM trees, Kafka compacted topics) is the split this module implements:
 
 - **append**: each micro-batch writes ONLY its increment-sized edge
   segment (``segments/s{batch_id}``) — per-batch write cost is O(batch),
@@ -18,20 +16,22 @@ compacted topics) is the opposite split:
   hash aggregate whose input is the segment rows;
 - **compaction**: when the live-segment count passes a threshold (or on
   an explicit ``compact_edge_log`` call) the segments are rolled up once
-  into a single base segment, restoring O(1)-segment reads — the
-  amortized rewrite the snapshot layout pays on EVERY batch.
+  into a single base segment, restoring O(1)-segment reads — an
+  amortized rewrite instead of one per batch (``compact_every=1`` folds
+  every batch, which is the rewrite-per-batch snapshot semantics on this
+  substrate).
 
-Commit protocol (same family as stream_edge_increments, extended with a
-manifest level — the filesystem mirror of a table format's snapshot +
+Commit protocol (the filesystem mirror of a table format's snapshot +
 manifest-list):
 
 - segment dirs are named by batch id and written with
   ``mode("overwrite")``: a crash mid-write leaves an uncommitted dir
   that re-delivery simply overwrites;
-- each commit writes an immutable ``MANIFEST.{n}`` (one live segment
-  path per line, tmp + ``os.replace``), then atomically swings
+- each commit writes an immutable ``MANIFEST.{n}`` (a
+  ``#batch=<bid> action=<append|compact>`` header, then one live
+  segment path per line; tmp + ``os.replace``), then atomically swings
   ``CURRENT`` — which records the manifest name, the last applied batch
-  id, and the CHECKPOINT IDENTITY (see stream_edge_increments: batch
+  id, and the CHECKPOINT IDENTITY (see ``_checkpoint_identity``: batch
   ids are only monotone within one checkpoint's sequence, so a
   fresh/recreated checkpoint against existing state fails loud instead
   of silently dropping batches);
@@ -63,22 +63,21 @@ they reference) through the prune — batch units, so an inline fold's
 two same-batch commits cost one slot and never silently shrink
 time-travel depth; the writer persists the window into the state dir
 (RETENTION) so offline compaction honors it by default — and
-``read_edge_log_asof`` / ``read_profile_partials_log_asof`` answer
-"the table as of batch b" by resolving b through the state's snapshot
-history (METRICS.jsonl records the manifest per commit — the Iceberg
-metadata-log / ``VERSION AS OF`` pattern; retention is the
-``expireSnapshots`` knob). Resolution is newest-snapshot-≤-b; reads of
+``read_edge_log_asof`` (and ``read_pipeline_edges_asof`` for the full
+chain) answer "the table as of batch b" by resolving b through the
+state's snapshot history (METRICS.jsonl records the manifest per
+commit — the Iceberg metadata-log / ``VERSION AS OF`` pattern;
+retention is the ``expireSnapshots`` knob). Resolution is newest-snapshot-≤-b; reads of
 expired snapshots fail loud. Since manifests and segments are
 immutable, an as-of read is value-identical to what the live read
 returned when that snapshot committed — pinned by the
 stream_edges_log_travel gate against a corpus-prefix SQL derivation.
 
-Changelog (incremental) reads: ``read_edge_log_changes`` /
-``read_profile_partials_log_changes`` hand a downstream incremental
-consumer (ANN index maintainer, serving-view refresher, replication)
-the monoid DELTA of batches ``(since, until]`` — the union-rollup of
-just those raw increment segments, never a table-sized diff — the
-Iceberg incremental-read verb. Reads that would need raw segments the
+Changelog (incremental) reads: ``read_edge_log_changes`` hands a
+downstream incremental consumer (ANN index maintainer, serving-view
+refresher, replication) the monoid DELTA of batches ``(since,
+until]`` — the union-rollup of just those raw increment segments,
+never a table-sized diff — the Iceberg incremental-read verb. Reads that would need raw segments the
 retention window already expired fail loud (consume more often or
 retain deeper), never return a silently partial delta.
 """
@@ -94,14 +93,42 @@ from pyspark.sql import DataFrame, SparkSession
 
 from transner_spark.config import PipelineConfig
 from transner_spark.operators.annotate import annotate_turns
-from transner_spark.streaming.incremental import (
-    TRANSCRIPT_SCHEMA,
-    _checkpoint_identity,
-    _read_current as _read_log_current,  # same CURRENT format (3 fields)
-)
+from transner_spark.streaming.incremental import TRANSCRIPT_SCHEMA
 
 SEGMENTS_DIR = "segments"
 MANIFEST_PREFIX = "MANIFEST."
+
+
+def _checkpoint_identity(checkpoint_dir: str) -> str:
+    """Stable identity of a streaming checkpoint: the query id Spark
+    records in ``<checkpoint>/metadata`` at stream start. A path digest
+    is NOT enough: a checkpoint deleted and recreated at the SAME path
+    restarts batch ids at 0 but keeps its digest, so the
+    guard would silently drop new batches — exactly the failure it
+    exists to make loud. The metadata query id is regenerated with the
+    checkpoint, so recreation is detected. Callers resolve this from
+    INSIDE foreachBatch (StreamExecution writes the file at query
+    start, before the first batch); a missing/unreadable metadata there
+    is itself an error worth raising. The uuid is whitespace-free —
+    safe inside the CURRENT line."""
+    import json as _json
+
+    with open(os.path.join(checkpoint_dir, "metadata")) as fh:
+        return str(_json.load(fh)["id"])
+
+
+def _read_log_current(state_dir: str) -> tuple[str | None, int, str | None]:
+    """(manifest name, last applied batch id, checkpoint identity) from
+    the CURRENT pointer; (None, -1, None) if nothing committed. A
+    two-field pointer yields identity None, which the writer's guard
+    refuses like any other mismatch."""
+    cur = os.path.join(state_dir, "CURRENT")
+    if not os.path.exists(cur):
+        return None, -1, None
+    with open(cur) as fh:
+        fields = fh.read().split()
+    ck_id = fields[2] if len(fields) > 2 else None
+    return fields[0], int(fields[1]), ck_id
 
 
 @contextlib.contextmanager
@@ -144,27 +171,28 @@ def _read_manifest(state_dir: str, manifest_name: str) -> list[str]:
         ]
 
 
-def _manifest_meta(
-    state_dir: str, manifest_name: str
-) -> tuple[int | None, str | None]:
+def _manifest_meta(state_dir: str, manifest_name: str) -> tuple[int, str]:
     """(batch_id, action) from the manifest's header line
-    (``#batch=<bid> action=<append|compact>``), or (None, None) for a
-    manifest written before headers existed. The header makes each
+    (``#batch=<bid> action=<append|compact>``). The header makes each
     snapshot self-describing so the prune can count retention in BATCH
     units without consulting (and re-scanning) the unbounded
-    METRICS.jsonl on every commit."""
+    METRICS.jsonl on every commit. A manifest without a valid header
+    was not written by ``_commit``: raise rather than guess its batch."""
     with open(os.path.join(state_dir, manifest_name)) as fh:
         first = fh.readline().strip()
-    if not first.startswith("#batch="):
-        return None, None
     fields = dict(
         kv.split("=", 1) for kv in first.lstrip("#").split() if "=" in kv
     )
     try:
-        bid = int(fields["batch"])
+        if first.startswith("#batch="):
+            return int(fields["batch"]), fields["action"]
     except (KeyError, ValueError):
-        return None, None
-    return bid, fields.get("action")
+        pass
+    raise RuntimeError(
+        f"manifest {manifest_name} in {state_dir!r} has no valid "
+        f"'#batch=<id> action=<append|compact>' header (got {first!r}) "
+        "— it was not written by this module."
+    )
 
 
 def log_segments(state_dir: str) -> tuple[list[str], int]:
@@ -180,10 +208,6 @@ def log_segments(state_dir: str) -> tuple[list[str], int]:
     return [_abs_seg(state_dir, r) for r in rels], bid
 
 
-# historical name from when the substrate only held edge state
-log_edge_segments = log_segments
-
-
 def _read_log(spark: SparkSession, state_dir: str, rollup) -> DataFrame | None:
     """Merge-on-read: union the live segments and apply the state's
     rollup monoid (one multi-path scan + one hash aggregate). Returns
@@ -197,10 +221,9 @@ def _read_log(spark: SparkSession, state_dir: str, rollup) -> DataFrame | None:
 def read_edge_log(
     spark: SparkSession, state_dir: str, cfg: PipelineConfig | None = None
 ) -> DataFrame | None:
-    """Merge-on-read over an edge-state dir via the edge monoid. The
-    result is value-identical to the snapshot layout's maintained
-    table — the stream_edges_log_eq gate checks it against the
-    whole-corpus SQL derivation."""
+    """Merge-on-read over an edge-state dir via the edge monoid — the
+    stream_edges_log_eq and stream_edges_batch_eq gates check it against
+    the whole-corpus SQL derivation."""
     from transner_spark.operators.materialize import merge_edge_increments
 
     return _read_log(
@@ -263,15 +286,21 @@ def _resolve_asof(state_dir: str, batch_id: int) -> str:
     return mname
 
 
-def _read_log_asof(
-    spark: SparkSession, state_dir: str, rollup, batch_id: int
+def read_edge_log_asof(
+    spark: SparkSession,
+    state_dir: str,
+    batch_id: int,
+    cfg: PipelineConfig | None = None,
 ) -> DataFrame:
-    """Merge-on-read pinned to a retained snapshot: union the segments
-    of the as-of manifest and apply the state's rollup monoid. The
-    result equals what ``_read_log`` returned when that snapshot was
-    live — the read path never depends on which commits happened
-    later (segments and manifests are immutable; retention only
-    controls how long they survive)."""
+    """Time-travel read of a maintained edge state: merge-on-read pinned
+    to the snapshot committed for ``batch_id`` (or the newest one before
+    it). The result equals what ``read_edge_log`` returned when that
+    snapshot was live — segments and manifests are immutable; retention
+    only controls how long they survive. The stream_edges_log_travel
+    gate pins this against the DuckDB edge derivation restricted to the
+    conversations of the first k micro-batches."""
+    from transner_spark.operators.materialize import merge_edge_increments
+
     mname = _resolve_asof(state_dir, batch_id)
     rels = _read_manifest(state_dir, mname)
     for r in rels:
@@ -280,36 +309,9 @@ def _read_log_asof(
                 f"snapshot {mname} references expired segment {r!r} — "
                 "retention window too small for this read."
             )
-    return rollup(spark.read.parquet(*(_abs_seg(state_dir, r) for r in rels)))
-
-
-def read_edge_log_asof(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    cfg: PipelineConfig | None = None,
-) -> DataFrame:
-    """Time-travel read of a maintained edge state: the edge table as of
-    the snapshot committed for ``batch_id`` (or the newest one before
-    it). The stream_edges_log_travel gate pins this against the DuckDB
-    edge derivation restricted to the conversations of the first k
-    micro-batches."""
-    from transner_spark.operators.materialize import merge_edge_increments
-
-    return _read_log_asof(
-        spark, state_dir, lambda df: merge_edge_increments(df, cfg=cfg), batch_id
+    return merge_edge_increments(
+        spark.read.parquet(*(_abs_seg(state_dir, r) for r in rels)), cfg=cfg
     )
-
-
-def read_profile_partials_log_asof(
-    spark: SparkSession, state_dir: str, batch_id: int
-) -> DataFrame:
-    """Time-travel read of a profile-partials state via the partial
-    monoid; feed to ``profiles_from_partials`` for the as-of serving
-    view."""
-    from transner_spark.operators.materialize import merge_profile_partials
-
-    return _read_log_asof(spark, state_dir, merge_profile_partials, batch_id)
 
 
 def _changes_segments(
@@ -358,17 +360,10 @@ def _changes_segments(
     with open(metrics_path) as fh:
         for line in fh:
             rec = _json.loads(line)
-            # 'append+compact' is the legacy FUSED action (pre
-            # two-commit folds): it still applied a batch, so it must
-            # not be silently skipped — its raw segment was orphaned by
-            # the fused fold, so the existence check below fails LOUD
-            # for it (the contract) instead of returning a partial delta
-            if rec.get("action") in ("append", "append+compact") and (
+            if rec["action"] == "append" and (
                 since_batch < rec["batch_id"] <= until
             ):
-                by_bid[rec["batch_id"]] = rec.get(
-                    "segment", f"{SEGMENTS_DIR}/s{rec['batch_id']}"
-                )
+                by_bid[rec["batch_id"]] = rec["segment"]
     missing = [
         (b, r)
         for b, r in sorted(by_bid.items())
@@ -385,29 +380,6 @@ def _changes_segments(
     return [by_bid[b] for b in sorted(by_bid)]
 
 
-def _read_log_changes(
-    spark: SparkSession,
-    state_dir: str,
-    rollup,
-    since_batch: int,
-    until_batch: int | None = None,
-) -> DataFrame | None:
-    """The monoid DELTA between two retained snapshots: union the raw
-    increment segments of the batches in ``(since, until]`` and roll
-    them up. By the merge monoid's associativity,
-    ``rollup(asof(since) ∪ changes(since, until)) == asof(until)`` —
-    pinned by tests/test_logstate.py. Returns None for an empty range
-    (no batches applied in the window). This is what a downstream
-    incremental consumer (ANN index maintainer, serving-view refresher)
-    reads instead of diffing two table-sized snapshots."""
-    rels = _changes_segments(state_dir, since_batch, until_batch)
-    if not rels:
-        return None
-    return rollup(
-        spark.read.parquet(*(_abs_seg(state_dir, r) for r in rels))
-    )
-
-
 def read_edge_log_changes(
     spark: SparkSession,
     state_dir: str,
@@ -415,36 +387,25 @@ def read_edge_log_changes(
     until_batch: int | None = None,
     cfg: PipelineConfig | None = None,
 ) -> DataFrame | None:
-    """Changelog read of a maintained edge state: the edge-increment
-    delta contributed by batches in ``(since_batch, until_batch]`` —
-    itself a valid increment table (merge it into any downstream copy
-    with ``merge_edge_increments``). Gate ``stream_edges_log_travel``
-    pins it against the DuckDB edge derivation restricted to those
-    batches' conversations."""
+    """Changelog read of a maintained edge state: the monoid DELTA of
+    batches in ``(since_batch, until_batch]`` — the raw increment
+    segments of those batches rolled up, itself a valid increment table
+    (merge it into any downstream copy with ``merge_edge_increments``).
+    By the monoid's associativity,
+    ``rollup(asof(since) ∪ changes(since, until)) == asof(until)`` —
+    pinned by tests/test_logstate.py. Returns None for an empty range
+    (no batches applied in the window). This is what a downstream
+    incremental consumer (ANN index maintainer, serving-view refresher)
+    reads instead of diffing two table-sized snapshots. Gate
+    ``stream_edges_log_travel`` pins it against the DuckDB edge
+    derivation restricted to those batches' conversations."""
     from transner_spark.operators.materialize import merge_edge_increments
 
-    return _read_log_changes(
-        spark,
-        state_dir,
-        lambda df: merge_edge_increments(df, cfg=cfg),
-        since_batch,
-        until_batch,
-    )
-
-
-def read_profile_partials_log_changes(
-    spark: SparkSession,
-    state_dir: str,
-    since_batch: int,
-    until_batch: int | None = None,
-) -> DataFrame | None:
-    """Changelog read of a profile-partials state: the partials delta
-    for ``(since, until]`` — mergeable into any downstream partials copy
-    with ``merge_profile_partials``."""
-    from transner_spark.operators.materialize import merge_profile_partials
-
-    return _read_log_changes(
-        spark, state_dir, merge_profile_partials, since_batch, until_batch
+    rels = _changes_segments(state_dir, since_batch, until_batch)
+    if not rels:
+        return None
+    return merge_edge_increments(
+        spark.read.parquet(*(_abs_seg(state_dir, r) for r in rels)), cfg=cfg
     )
 
 
@@ -504,13 +465,14 @@ def _commit(
     batch_id: int,
     ck_identity: str,
     manifest_seq: int,
+    metrics: dict,
     retain: int | None = None,
-    metrics: dict | None = None,
     supersede: bool = False,
 ) -> str:
     """Write an immutable manifest (with a self-describing
-    ``#batch=<bid> action=<...>`` header), append the
-    snapshot-history/metrics line, then atomically swing CURRENT; prune
+    ``#batch=<bid> action=<...>`` header, the action taken from
+    ``metrics``), append the snapshot-history/metrics line, then
+    atomically swing CURRENT; prune
     via ``_prune`` after the commit. Caller holds ``_writer_lock``, so
     no other commit's in-flight tmp can exist during the prune. The
     history line goes in BEFORE the swing so a committed snapshot can
@@ -519,7 +481,7 @@ def _commit(
     ``retain`` is the snapshot-retention window in BATCH units: the
     snapshots of the last ``retain`` DISTINCT applied batch ids survive
     the prune, along with every segment any of them references — so
-    ``read_*_log_asof`` can time-travel to any of the last ``retain``
+    ``read_edge_log_asof`` can time-travel to any of the last ``retain``
     batches, including across a compaction. An inline fold's two
     commits share a batch id and therefore consume ONE retention slot
     (a fold never silently shrinks time-travel depth), and the fold's
@@ -535,17 +497,15 @@ def _commit(
     committed manifest's name."""
     if retain is None:
         retain = _state_retention(state_dir)
-    action = (metrics or {}).get("action", "append")
     mname = f"{MANIFEST_PREFIX}{manifest_seq}"
     tmp = os.path.join(state_dir, f"{mname}.{os.getpid()}.tmp")
     with open(tmp, "w") as fh:
-        fh.write(f"#batch={batch_id} action={action}\n")
+        fh.write(f"#batch={batch_id} action={metrics['action']}\n")
         fh.write("\n".join(segment_rels) + "\n")
     os.replace(tmp, os.path.join(state_dir, mname))
-    if metrics is not None:
-        _append_metrics(
-            state_dir, {**metrics, "batch_id": batch_id, "manifest": mname}
-        )
+    _append_metrics(
+        state_dir, {**metrics, "batch_id": batch_id, "manifest": mname}
+    )
     tmp = os.path.join(state_dir, f"CURRENT.{os.getpid()}.tmp")
     with open(tmp, "w") as fh:
         fh.write(f"{mname} {batch_id} {ck_identity}")
@@ -560,12 +520,9 @@ def _prune(state_dir: str, retain: int, supersede: bool = False) -> int:
     already diverged on ``*.tmp`` cleanup). Retention is counted in
     BATCH units: walking manifests newest-first, a manifest survives iff
     its batch id is among the first ``retain`` distinct batch ids
-    encountered — so an inline fold's append+compact pair costs one slot
-    and ``retain=k`` always means "the last k applied batches stay
-    time-travelable". Manifests from before self-describing headers
-    existed have no recoverable batch id; each counts as its own slot
-    (the old manifest-count semantics, so legacy states degrade to
-    exactly their old behavior).
+    encountered — so an inline fold's append and compact commits cost
+    one slot and ``retain=k`` always means "the last k applied batches
+    stay time-travelable".
 
     ``supersede=True`` (offline compaction / ``expire_snapshots``)
     additionally drops append manifests shadowed by a NEWER compact
@@ -587,25 +544,23 @@ def _prune(state_dir: str, retain: int, supersede: bool = False) -> int:
         reverse=True,
     )
     retain = max(1, retain)
-    seen_keys: list[tuple] = []
-    compacted_keys: set[tuple] = set()
+    seen_bids: list[int] = []
+    compacted_bids: set[int] = set()
     keep: list[str] = []
     drop: list[str] = []
-    for seq, f in entries:
+    for _, f in entries:
         bid, action = _manifest_meta(state_dir, f)
-        # legacy manifests (no header): unique key -> one slot each
-        key = ("b", bid) if bid is not None else ("m", seq)
-        is_compact = action is not None and "compact" in action
-        if key not in seen_keys:
-            if len(seen_keys) >= retain:
+        is_compact = action == "compact"
+        if bid not in seen_bids:
+            if len(seen_bids) >= retain:
                 drop.append(f)
                 continue
-            seen_keys.append(key)
-        if supersede and not is_compact and key in compacted_keys:
+            seen_bids.append(bid)
+        if supersede and not is_compact and bid in compacted_bids:
             drop.append(f)
             continue
         if is_compact:
-            compacted_keys.add(key)
+            compacted_bids.add(bid)
         keep.append(f)
     live: set[str] = set()
     for f in keep:
@@ -807,7 +762,7 @@ def _stream_log_maintenance(
                 retain=retain_snapshots,
                 metrics={
                     "action": "append",
-                    "segment": seg_rel,  # the changelog unit (_read_log_changes)
+                    "segment": seg_rel,  # the changelog unit (_changes_segments)
                     "segments_live": len(rels),
                     "rows_appended": n_inc,
                     "rows_written": n_inc,
@@ -881,15 +836,18 @@ def stream_edge_increments_log(
     compact_every: int | None = None,
     retain_snapshots: int = 1,
 ):
-    """Log-structured twin of ``stream_edge_increments``: each
-    micro-batch of new transcripts is annotated, rolled up to an edge
-    increment (operators/materialize), and APPENDED as a segment —
-    per-batch write cost is the increment, never the accumulated table.
+    """Streaming KG maintenance of the edge table: each micro-batch of
+    new transcripts is annotated, rolled up to an edge increment
+    (operators/materialize), and APPENDED as a segment — per-batch
+    write cost is the increment, never the accumulated table.
     ``compact_every=k`` compacts inline whenever the live-segment count
     would reach k (the LSM flush knob; None = never, compaction is then
-    an offline ``compact_edge_log`` call). Canon-map cadence and the
-    checkpoint-identity guard are identical to the snapshot twin — see
-    its docstring for the two-speed design and the guard rationale."""
+    an offline ``compact_edge_log`` call; 1 = fold every batch into one
+    base segment). The canonical map is a parameter: it refreshes on a
+    slower cadence than the edge increments (the two-speed design
+    documented on merge_edge_increments); a canon refresh triggers a
+    one-off batch re-resolution, not a streaming change. A state dir is
+    bound to the checkpoint that built it (``_checkpoint_identity``)."""
     from transner_spark.operators.annotate import explode_triples
     from transner_spark.operators.materialize import (
         materialize_edges,
